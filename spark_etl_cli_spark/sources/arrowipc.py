@@ -57,6 +57,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from spark_etl_cli_spark.registry import register_sink, register_source
+from spark_etl_cli_spark.sources.logtail import register_once, require_path
 from spark_etl_cli_spark.uri import ParsedUri
 
 _FORMAT_NAME = "arrowipc"
@@ -85,9 +86,7 @@ class _BatchRange(InputPartition):
 
 class _ArrowIPCReader(DataSourceReader):
     def __init__(self, options: dict, schema: StructType) -> None:
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("arrowipc reader requires a path")
+        self.path = require_path(options)
         self.batches_per_task = int(options.get("batches-per-task", "8"))
         self.pushed: list[Filter] = []
 
@@ -175,9 +174,7 @@ class _ArrowIPCStreamReader(DataSourceStreamReader):
     """
 
     def __init__(self, options: dict) -> None:
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("arrowipc stream reader requires a path")
+        self.path = require_path(options)
         self.batches_per_task = int(options.get("batches-per-task", "8"))
 
     def initialOffset(self) -> dict:
@@ -231,9 +228,7 @@ class _WroteFile(WriterCommitMessage):
 
 class _ArrowIPCWriter(DataSourceArrowWriter):
     def __init__(self, options: dict, schema: StructType) -> None:
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("arrowipc writer requires a path")
+        self.path = require_path(options)
         self.schema = schema
 
     def write(self, iterator: Iterator) -> WriterCommitMessage:
@@ -287,9 +282,7 @@ class ArrowIPCDataSource(DataSource):
         from pyspark.sql.pandas.types import from_arrow_schema
         import pyarrow as pa
 
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("arrowipc requires a path")
+        path = require_path(self.options)
         files = _list_ipc_files(path)
         if not files:
             raise FileNotFoundError(f"no Arrow IPC files under {path!r}")
@@ -311,18 +304,11 @@ class ArrowIPCDataSource(DataSource):
         return _ArrowIPCWriter(dict(self.options), schema)
 
 
-_registered_sessions: set[str] = set()
-
-
 def _ensure_registered(spark: SparkSession) -> None:
-    # dataSource.register is per-session; make it idempotent per session.
-    key = str(id(spark))
-    if key not in _registered_sessions:
-        spark.dataSource.register(ArrowIPCDataSource)
+    if register_once(spark, ArrowIPCDataSource):
         # pushFilters requires this runtime conf; sessions built outside
         # get_spark (e.g. a bare SparkSession in a notebook) may lack it.
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-        _registered_sessions.add(key)
 
 
 @dataclass

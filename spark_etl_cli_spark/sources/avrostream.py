@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import glob as _glob
 import os
-from dataclasses import dataclass
 from typing import Iterator, Sequence
 
 from pyspark.sql import SparkSession
@@ -30,6 +29,12 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 from pyspark.sql.types import StructType
+
+from spark_etl_cli_spark.sources.logtail import (
+    FilePart,
+    register_once,
+    require_path,
+)
 
 _FORMAT_NAME = "avrolite"
 
@@ -42,16 +47,9 @@ def _list_avro_files(path: str) -> list[str]:
     return [path] if os.path.exists(path) else []
 
 
-@dataclass
-class _FilePart(InputPartition):
-    file: str
-
-
 class _AvroLiteStreamReader(DataSourceStreamReader):
     def __init__(self, options: dict) -> None:
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("avrolite stream reader requires a path")
+        self.path = require_path(options)
 
     def initialOffset(self) -> dict:
         return {"files": []}
@@ -79,10 +77,10 @@ class _AvroLiteStreamReader(DataSourceStreamReader):
                     f"avrolite stream: offset lists {name!r} but it no "
                     f"longer exists under {self.path!r}"
                 )
-            parts.append(_FilePart(full))
-        return parts or [_FilePart("")]
+            parts.append(FilePart(full))
+        return parts or [FilePart("")]
 
-    def read(self, partition: _FilePart) -> Iterator[tuple]:
+    def read(self, partition: FilePart) -> Iterator[tuple]:
         if not partition.file:
             return
         from spark_etl_cli_spark.sources.avro_lite import read_container
@@ -111,9 +109,7 @@ class AvroLiteDataSource(DataSource):
             read_container,
         )
 
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("avrolite requires a path")
+        path = require_path(self.options)
         # NOTE: an explicit user schema arrives via readStream.schema()
         # (parsed driver-side in files.py) — this hook then never runs.
         # It executes in a session-less Python worker, so it can only
@@ -133,11 +129,5 @@ class AvroLiteDataSource(DataSource):
         return _AvroLiteStreamReader(dict(self.options))
 
 
-_registered_sessions: set[str] = set()
-
-
 def ensure_registered(spark: SparkSession) -> None:
-    key = str(id(spark))
-    if key not in _registered_sessions:
-        spark.dataSource.register(AvroLiteDataSource)
-        _registered_sessions.add(key)
+    register_once(spark, AvroLiteDataSource)

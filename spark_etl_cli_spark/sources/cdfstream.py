@@ -29,22 +29,25 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
-from typing import Iterator, Sequence
+from functools import partial
+from urllib.parse import unquote
 
 from pyspark.sql import SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource
 from pyspark.sql.types import StructType
 
 from spark_etl_cli_spark.sources.deltastream import (
     _latest_meta,
     _log_dir,
+    _read_commit,
     _versions,
     _with_partition_columns,
+)
+from spark_etl_cli_spark.sources.logtail import (
+    FilePart,
+    LogTailReader,
+    register_once,
+    require_path,
 )
 
 _FORMAT_NAME = "deltalite-cdf-stream"
@@ -52,16 +55,6 @@ _FORMAT_NAME = "deltalite-cdf-stream"
 _CDC_COL = "_change_type"
 _VER_COL = "_commit_version"
 _TS_COL = "_commit_timestamp"
-
-
-@dataclass
-class _CdfPart(InputPartition):
-    file: str
-    kind: str  # "cdc" | "insert" | "delete"
-    version: int
-    ts_ms: int
-    part_json: str = ""  # partition values for derived files, "" = none
-    schema_json: str = ""  # TABLE schema (without the CDF columns)
 
 
 def _cdf_enabled(meta: dict | None) -> bool:
@@ -72,52 +65,80 @@ def _cdf_enabled(meta: dict | None) -> bool:
     )
 
 
-class _CdfStreamReader(DataSourceStreamReader):
+def _change_records(
+    table,
+    kind: str,
+    version: int,
+    ts_ms: int,
+    part_json: str,
+    schema_json: str,
+):
+    """One file's rows as change records: the table columns conformed
+    to ``schema_json`` plus ``_change_type`` / ``_commit_version`` /
+    ``_commit_timestamp``. ``kind`` is "cdc" (a change file carrying
+    its own ``_change_type``), "insert" or "delete"."""
+    import pyarrow as pa
+
+    if kind == "cdc":
+        # change file: table columns (possibly pre-widening) +
+        # _change_type. Conform the data columns to the declared
+        # schema, then re-attach the file's _change_type.
+        change_type = table.column(_CDC_COL)
+        base = table.drop_columns([_CDC_COL])
+        base = _with_partition_columns(base, part_json, schema_json)
+        table = base.append_column(_CDC_COL, change_type)
+    else:
+        table = _with_partition_columns(table, part_json, schema_json)
+        table = table.append_column(
+            _CDC_COL, pa.array([kind] * table.num_rows, pa.string())
+        )
+    n = table.num_rows
+    table = table.append_column(
+        _VER_COL, pa.array([version] * n, pa.int64())
+    )
+    return table.append_column(
+        _TS_COL, pa.array([ts_ms * 1000] * n, pa.timestamp("us"))
+    )
+
+
+class _CdfStreamReader(LogTailReader):
+    offset_key = "version"
+
     def __init__(self, options: dict) -> None:
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("deltalite CDF stream reader requires a path")
+        super().__init__(options)
         # Spark lowercases Python data source option keys
         sv = options.get("startingversion") or options.get(
             "startingVersion"
         )
-        self.starting_version = int(sv) if sv is not None else 0
-        # steady-state backlog control, same contract as deltastream:
-        # ≤N commits per micro-batch while tailing; the first batch
-        # after a (re)start is uncapped (see deltastream.py)
-        self.max_commits = int(
-            options.get("max-commits-per-batch")
-            or options.get("maxcommitsperbatch")
-            or 0
-        )
-        self._pos: int | None = None
+        self.start = (int(sv) if sv is not None else 0) - 1
 
-    def initialOffset(self) -> dict:
-        return {"version": self.starting_version - 1}
+    def commit_ids(self) -> list[int]:
+        return _versions(self.path)
 
-    def latestOffset(self) -> dict:
-        vs = _versions(self.path)
-        real = vs[-1] if vs else self.starting_version - 1
-        if self.max_commits and self._pos is not None:
-            real = min(real, self._pos + self.max_commits)
-        return {"version": real}
-
-    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        from urllib.parse import unquote
-
-        lo, hi = start.get("version", -1), end.get("version", -1)
-        self._pos = max(lo, hi, self._pos if self._pos is not None else -1)
+    def files_between(self, lo: int, hi: int) -> list[FilePart]:
         meta = _latest_meta(self.path) or {}
         schema_json = meta.get("schemaString", "")
-        parts: list[_CdfPart] = []
+        parts: list[FilePart] = []
+
+        def part(f: str, kind: str, v: int, ts_ms: int, pv: dict) -> None:
+            parts.append(
+                FilePart(
+                    f,
+                    partial(
+                        _change_records,
+                        kind=kind,
+                        version=v,
+                        ts_ms=ts_ms,
+                        part_json=json.dumps(pv),
+                        schema_json=schema_json,
+                    ),
+                )
+            )
+
         for v in _versions(self.path):
             if not (lo < v <= hi):
                 continue
-            commit = os.path.join(_log_dir(self.path), f"{v:020d}.json")
-            with open(commit) as fh:
-                actions = [
-                    json.loads(line) for line in fh if line.strip()
-                ]
+            actions = _read_commit(self.path, v)
             ts_ms = next(
                 (
                     a["commitInfo"].get("timestamp")
@@ -128,7 +149,12 @@ class _CdfStreamReader(DataSourceStreamReader):
                 None,
             )
             if ts_ms is None:
-                ts_ms = int(os.path.getmtime(commit) * 1000)
+                ts_ms = int(
+                    os.path.getmtime(
+                        os.path.join(_log_dir(self.path), f"{v:020d}.json")
+                    )
+                    * 1000
+                )
             cdc = [a["cdc"] for a in actions if "cdc" in a]
             if cdc:
                 # the cdc files ARE the commit's change set; add/remove
@@ -140,9 +166,7 @@ class _CdfStreamReader(DataSourceStreamReader):
                         raise FileNotFoundError(
                             f"change data file vacuumed away: {f}"
                         )
-                    parts.append(
-                        _CdfPart(f, "cdc", v, ts_ms, "", schema_json)
-                    )
+                    part(f, "cdc", v, ts_ms, {})
                 continue
             for a in actions:
                 add = a.get("add")
@@ -155,16 +179,12 @@ class _CdfStreamReader(DataSourceStreamReader):
                             "enableChangeDataFeed set? Use batch "
                             "readChangeFeed or rewrite with CDF on"
                         )
-                    pv = add.get("partitionValues") or {}
-                    parts.append(
-                        _CdfPart(
-                            os.path.join(self.path, unquote(add["path"])),
-                            "insert",
-                            v,
-                            ts_ms,
-                            json.dumps(pv) if pv else "",
-                            schema_json,
-                        )
+                    part(
+                        os.path.join(self.path, unquote(add["path"])),
+                        "insert",
+                        v,
+                        ts_ms,
+                        add.get("partitionValues") or {},
                     )
                 elif rem and rem.get("dataChange", True):
                     f = os.path.join(self.path, unquote(rem["path"]))
@@ -173,60 +193,10 @@ class _CdfStreamReader(DataSourceStreamReader):
                             "CDF stream: removed data file vacuumed "
                             f"away, cannot derive deletes: {f}"
                         )
-                    pv = rem.get("partitionValues") or {}
-                    parts.append(
-                        _CdfPart(
-                            f,
-                            "delete",
-                            v,
-                            ts_ms,
-                            json.dumps(pv) if pv else "",
-                            schema_json,
-                        )
+                    part(
+                        f, "delete", v, ts_ms, rem.get("partitionValues") or {}
                     )
-        return parts or [_CdfPart("", "cdc", -1, 0)]
-
-    def read(self, partition: _CdfPart) -> Iterator:
-        if not partition.file:
-            return
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        table = pq.read_table(partition.file)
-        if partition.kind == "cdc":
-            # change file: table columns (possibly pre-widening) +
-            # _change_type. Conform the data columns to the declared
-            # schema, then re-attach the file's _change_type.
-            change_type = table.column(_CDC_COL)
-            base = table.drop_columns([_CDC_COL])
-            base = _with_partition_columns(
-                base, "{}", partition.schema_json
-            )
-            table = base.append_column(_CDC_COL, change_type)
-        else:
-            table = _with_partition_columns(
-                table, partition.part_json or "{}", partition.schema_json
-            )
-            n = table.num_rows
-            table = table.append_column(
-                _CDC_COL, pa.array([partition.kind] * n, pa.string())
-            )
-        n = table.num_rows
-        table = table.append_column(
-            _VER_COL, pa.array([partition.version] * n, pa.int64())
-        )
-        table = table.append_column(
-            _TS_COL,
-            pa.array(
-                [partition.ts_ms * 1000] * n, pa.timestamp("us")
-            ),
-        )
-        for batch in table.to_batches():
-            if batch.num_rows:
-                yield batch
-
-    def commit(self, end: dict) -> None:
-        return None
+        return parts
 
 
 class DeltaLiteCdfStreamSource(DataSource):
@@ -235,9 +205,7 @@ class DeltaLiteCdfStreamSource(DataSource):
         return _FORMAT_NAME
 
     def schema(self) -> StructType:
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("deltalite CDF stream requires a path")
+        path = require_path(self.options)
         from pyspark.sql import types as T
 
         meta = _latest_meta(path)
@@ -265,11 +233,5 @@ class DeltaLiteCdfStreamSource(DataSource):
         return _CdfStreamReader(dict(self.options))
 
 
-_registered_sessions: set[str] = set()
-
-
 def ensure_registered(spark: SparkSession) -> None:
-    key = str(id(spark))
-    if key not in _registered_sessions:
-        spark.dataSource.register(DeltaLiteCdfStreamSource)
-        _registered_sessions.add(key)
+    register_once(spark, DeltaLiteCdfStreamSource)

@@ -10,7 +10,7 @@ can then scan. That makes ``delta://`` READS work without the
 delta-spark jars (mirroring the stdlib SpreadsheetML fallback of the
 excel connector, sources/xlsx_lite.py). WRITES work engine-free too
 (:func:`write_delta_lite`: parquet data files + a JSON commit with
-add/remove actions, O_EXCL version reservation); streaming writes
+add/remove actions, atomic version claim); streaming writes
 bridge via foreachBatch with per-epoch ``txn`` (SetTransaction)
 actions, so a replayed micro-batch is an idempotent no-op — the same
 exactly-once contract the jar'd sink derives from its LogStore.
@@ -38,6 +38,12 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from spark_etl_cli_spark.sources.commit import (
+    CommitConflict,
+    claim,
+    overwrite,
+)
 
 
 def _log_dir(table_path: str) -> str:
@@ -940,9 +946,9 @@ def _apply_deletion_vector(
 # The commit side of the same public protocol: write the data files as
 # plain parquet, then append one JSON commit whose add/remove actions
 # describe the change. Good for single-writer local/posix use — the
-# version-reservation uses O_CREAT|O_EXCL, which is atomic on POSIX but
-# is NOT the multi-writer LogStore protocol real Delta uses on object
-# stores; concurrent writers on S3-like storage still need delta-spark.
+# version claim (sources/commit.py) is atomic on POSIX but is NOT the
+# multi-writer LogStore protocol real Delta uses on object stores;
+# concurrent writers on S3-like storage still need delta-spark.
 
 
 def _next_version(log_dir: str) -> int:
@@ -1947,8 +1953,9 @@ def _write_commit(
 ) -> int:
     """Claim the next log version and write one JSON commit.
 
-    O_EXCL: the commit either claims this version or fails — never
-    silently overwrites a concurrent writer's commit. BLIND APPENDS
+    ``commit.claim``: the commit either publishes this version whole or
+    fails — never silently overwrites a concurrent writer's commit, never
+    leaves a truncated one. BLIND APPENDS
     (add/txn/commitInfo actions only — no removes, no metadata or
     protocol changes) retry against the next version on a collision,
     Delta's optimistic-concurrency rule: two appends can serialize in
@@ -1963,6 +1970,7 @@ def _write_commit(
         set(a) <= {"add", "txn", "commitInfo"} for a in actions
     )
     attempts = 50 if blind_append else 1
+    body = "".join(json.dumps(a) + "\n" for a in actions)
     last_err: OSError | None = None
     checked_to = read_version  # commits ≤ this are part of our snapshot
     for _ in range(attempts):
@@ -1973,7 +1981,7 @@ def _write_commit(
         # append's files were written under the old schema / physical
         # column names and its constraint checks ran against the old
         # configuration. Scan every commit between our read snapshot and
-        # the slot we are about to claim (covers both the O_EXCL-race
+        # the slot we are about to claim (covers both the claim-race
         # path and a commit that landed before _next_version's rescan).
         if blind_append and checked_to is not None:
             for v in range(checked_to + 1, version):
@@ -1996,17 +2004,11 @@ def _write_commit(
                         "against the new HEAD."
                     )
             checked_to = version - 1
-        commit_path = os.path.join(log_dir, f"{version:020d}.json")
         try:
-            fd = os.open(
-                commit_path, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644
-            )
-        except FileExistsError as e:
+            claim(os.path.join(log_dir, f"{version:020d}.json"), body)
+        except CommitConflict as e:
             last_err = e
             continue  # next attempt re-scans the winner before rebasing
-        with os.fdopen(fd, "w") as fh:
-            for action in actions:
-                fh.write(json.dumps(action) + "\n")
         if version > 0 and (version + 1) % CHECKPOINT_INTERVAL == 0:
             write_checkpoint(spark, table_path)
         return version
@@ -2272,8 +2274,10 @@ def write_checkpoint(spark: SparkSession, table_path: str) -> int:
         shutil.move(os.path.join(tmp, part), dst)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    with open(os.path.join(log_dir, "_last_checkpoint"), "w") as fh:
-        json.dump({"version": version, "size": len(rows)}, fh)
+    overwrite(
+        os.path.join(log_dir, "_last_checkpoint"),
+        json.dumps({"version": version, "size": len(rows)}),
+    )
     return version
 
 
@@ -2492,13 +2496,7 @@ def optimize_delta_lite(
             }
         }
     )
-    log_dir = _log_dir(table_path)
-    version = _next_version(log_dir)
-    commit_path = os.path.join(log_dir, f"{version:020d}.json")
-    fd = os.open(commit_path, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
-    with os.fdopen(fd, "w") as fh:
-        for action in actions:
-            fh.write(json.dumps(action) + "\n")
+    _write_commit(spark, table_path, actions)
     return stats
 
 

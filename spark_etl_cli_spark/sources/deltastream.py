@@ -21,16 +21,19 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
-from typing import Iterator, Sequence
+from functools import partial
+from urllib.parse import unquote
 
 from pyspark.sql import SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource
 from pyspark.sql.types import StructType
+
+from spark_etl_cli_spark.sources.logtail import (
+    FilePart,
+    LogTailReader,
+    register_once,
+    require_path,
+)
 
 _FORMAT_NAME = "deltalite-stream"
 
@@ -51,65 +54,35 @@ def _versions(path: str) -> list[int]:
     )
 
 
-@dataclass
-class _FilePart(InputPartition):
-    file: str
-    # JSON {col: raw string value} for the file's partition tuple, plus
-    # the table schema JSON so the (session-less) worker can type the
-    # restored columns; "" for unpartitioned tables
-    part_json: str = ""
-    schema_json: str = ""
+def _read_commit(path: str, v: int) -> list[dict]:
+    with open(os.path.join(_log_dir(path), f"{v:020d}.json")) as fh:
+        return [json.loads(line) for line in fh if line.strip()]
 
 
 def _latest_meta(path: str) -> dict | None:
     meta = None
     for v in _versions(path):
-        commit = os.path.join(_log_dir(path), f"{v:020d}.json")
-        with open(commit) as fh:
-            for line in fh:
-                if line.strip():
-                    action = json.loads(line)
-                    if "metaData" in action:
-                        meta = action["metaData"]
+        for action in _read_commit(path, v):
+            if "metaData" in action:
+                meta = action["metaData"]
     return meta
 
 
-class _DeltaLiteStreamReader(DataSourceStreamReader):
+class _DeltaLiteStreamReader(LogTailReader):
+    offset_key = "version"
+
     def __init__(self, options: dict) -> None:
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("deltalite stream reader requires a path")
+        super().__init__(options)
         # Spark hands Python data sources a lowercased option map
         self.skip_change_commits = str(
             options.get("skipchangecommits")
             or options.get("skipChangeCommits", "")
         ).lower() in ("1", "true", "yes")
-        # steady-state backlog control: at most N commits per
-        # micro-batch while TAILING. The first micro-batch after a
-        # (re)start is uncapped — Spark asks for latestOffset before
-        # the reader learns its position, and returning an offset
-        # behind a restart's checkpoint would rewind the stream — so
-        # the cap binds from the second batch on.
-        self.max_commits = int(
-            options.get("max-commits-per-batch")
-            or options.get("maxcommitsperbatch")
-            or 0
-        )
-        self._pos: int | None = None
 
-    def initialOffset(self) -> dict:
-        return {"version": -1}
+    def commit_ids(self) -> list[int]:
+        return _versions(self.path)
 
-    def latestOffset(self) -> dict:
-        vs = _versions(self.path)
-        real = vs[-1] if vs else -1
-        if self.max_commits and self._pos is not None:
-            real = min(real, self._pos + self.max_commits)
-        return {"version": real}
-
-    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        lo, hi = start.get("version", -1), end.get("version", -1)
-        self._pos = max(lo, hi, self._pos if self._pos is not None else -1)
+    def files_between(self, lo: int, hi: int) -> list[FilePart]:
         meta = _latest_meta(self.path) or {}
         part_cols = meta.get("partitionColumns") or []
         schema_json = meta.get("schemaString", "")
@@ -117,11 +90,7 @@ class _DeltaLiteStreamReader(DataSourceStreamReader):
         for v in _versions(self.path):
             if not (lo < v <= hi):
                 continue
-            commit = os.path.join(_log_dir(self.path), f"{v:020d}.json")
-            with open(commit) as fh:
-                actions = [
-                    json.loads(line) for line in fh if line.strip()
-                ]
+            actions = _read_commit(self.path, v)
             # a remove with dataChange=true means rows were UPDATED or
             # DELETED (overwrite / DELETE / MERGE), not just appended.
             # Streaming the commit's re-adds would re-deliver surviving
@@ -157,38 +126,28 @@ class _DeltaLiteStreamReader(DataSourceStreamReader):
                         "deletion-vector re-add without double-counting; "
                         "use batch delta:// reads for DV tables"
                     )
-                from urllib.parse import unquote
-
                 pv = add.get("partitionValues") or {}
                 entries[os.path.join(self.path, unquote(add["path"]))] = (
                     json.dumps({c: pv.get(c) for c in part_cols})
                     if part_cols
-                    else ""
+                    else "{}"
                 )
-        parts = [
-            _FilePart(f, entries[f], schema_json) for f in sorted(entries)
-        ]
-        return parts or [_FilePart("")]
-
-    def read(self, partition: _FilePart) -> Iterator:
-        if not partition.file:
-            return
-        import pyarrow.parquet as pq
-
-        table = pq.read_table(partition.file)
-        if partition.schema_json:
-            # conform EVERY file to the declared schema: restores
-            # partition columns, and fills null for columns a
-            # mergeSchema widening added after this file was written
-            table = _with_partition_columns(
-                table, partition.part_json or "{}", partition.schema_json
+        # conform EVERY file to the declared schema: restores partition
+        # columns, and fills null for columns a mergeSchema widening
+        # added after this file was written
+        return [
+            FilePart(
+                f,
+                partial(
+                    _with_partition_columns,
+                    part_json=entries[f],
+                    schema_json=schema_json,
+                )
+                if schema_json
+                else None,
             )
-        for batch in table.to_batches():
-            if batch.num_rows:
-                yield batch
-
-    def commit(self, end: dict) -> None:
-        return None
+            for f in sorted(entries)
+        ]
 
 
 def _with_partition_columns(table, part_json: str, schema_json: str):
@@ -266,11 +225,7 @@ class DeltaLiteStreamSource(DataSource):
     def schema(self) -> StructType:
         # runs in a session-less Python worker: parse schemaString
         # (pure-python StructType.fromJson) from the latest metaData
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("deltalite stream requires a path")
-        from pyspark.sql.types import StructType as _St
-
+        path = require_path(self.options)
         meta = _latest_meta(path)
         if meta is None:
             raise FileNotFoundError(
@@ -279,17 +234,11 @@ class DeltaLiteStreamSource(DataSource):
             )
         # partitioned tables stream too: partition values live in the
         # log, and read() restores them as typed constant columns
-        return _St.fromJson(json.loads(meta["schemaString"]))
+        return StructType.fromJson(json.loads(meta["schemaString"]))
 
     def streamReader(self, schema: StructType) -> _DeltaLiteStreamReader:
         return _DeltaLiteStreamReader(dict(self.options))
 
 
-_registered_sessions: set[str] = set()
-
-
 def ensure_registered(spark: SparkSession) -> None:
-    key = str(id(spark))
-    if key not in _registered_sessions:
-        spark.dataSource.register(DeltaLiteStreamSource)
-        _registered_sessions.add(key)
+    register_once(spark, DeltaLiteStreamSource)

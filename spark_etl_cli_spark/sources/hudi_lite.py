@@ -29,6 +29,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from spark_etl_cli_spark.sources.commit import claim
 
 # Hudi's first bookkeeping meta column; stamped on COW base-file rows
 # so incremental queries can filter "changed since instant T"
@@ -1108,11 +1109,8 @@ def write_hudi_lite(
         )
         for part, sts in rewrites.items():
             body["partitionToWriteStats"].setdefault(part, []).extend(sts)
-    # O_EXCL commit claim: two racing writers can't both win the instant
-    commit_path = os.path.join(hoodie, f"{ts}.{action}")
-    fd = os.open(commit_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(body, fh)
+    # two racing writers can't both win the instant
+    claim(os.path.join(hoodie, f"{ts}.{action}"), json.dumps(body))
     return ts
 
 
@@ -1186,7 +1184,7 @@ def _mor_upsert_commit(
     # path with no extra routing. An update that MOVES a key across
     # partitions becomes delete-in-old-group (a DELETE log block) +
     # insert-in-new-partition (a new file group), BOTH under this one
-    # deltacommit — the timeline instant is claimed O_EXCL after every
+    # deltacommit — the timeline instant is claimed atomically after every
     # file lands, so readers never see the half-applied state and a
     # crashed writer leaves only orphan files outside the timeline.
     key_fid = merged.select(
@@ -1339,9 +1337,7 @@ def _mor_upsert_commit(
 
     body = {"partitionToWriteStats": per_part or {"": []}}
     commit_path = os.path.join(table_path, ".hoodie", f"{ts}.deltacommit")
-    fd = os.open(commit_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(body, fh)
+    claim(commit_path, json.dumps(body))
     return ts
 
 
@@ -1446,9 +1442,7 @@ def _mor_delete_commit(
         ent["numWrites"] += r["rows"]
     body = {"partitionToWriteStats": per_part}
     commit_path = os.path.join(table_path, ".hoodie", f"{ts}.deltacommit")
-    fd = os.open(commit_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(body, fh)
+    claim(commit_path, json.dumps(body))
     return {
         "files_rewritten": 0,
         "files_added": len(seen),
@@ -1646,9 +1640,7 @@ def compact_hudi_mor_lite(spark: SparkSession, table_path: str) -> dict:
         shutil.rmtree(tmp, ignore_errors=True)
     body = {"partitionToWriteStats": per_part}
     commit_path = os.path.join(table_path, ".hoodie", f"{ts}.commit")
-    fd = os.open(commit_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(body, fh)
+    claim(commit_path, json.dumps(body))
     return {
         "groups_compacted": len(logged),
         "files_added": sum(len(v) for v in per_part.values()),
@@ -1843,9 +1835,7 @@ def delete_hudi_lite(
     commit_path = os.path.join(
         table_path, ".hoodie", f"{ts}.replacecommit"
     )
-    fd = os.open(commit_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(body, fh)
+    claim(commit_path, json.dumps(body))
     return {
         "files_rewritten": len(affected),
         "files_added": sum(len(v) for v in per_part.values()),
@@ -1909,16 +1899,17 @@ def clean_hudi_lite(
     tdir = os.path.join(table_path, ".hoodie")
     if os.path.isdir(os.path.join(tdir, "timeline")):
         tdir = os.path.join(tdir, "timeline")
-    with open(os.path.join(tdir, f"{ts}.clean"), "w") as fh:
-        _json.dump(
+    claim(
+        os.path.join(tdir, f"{ts}.clean"),
+        _json.dumps(
             {
                 "policy": "KEEP_LATEST_COMMITS",
                 "retain_commits": retain_commits,
                 "earliestInstantToRetain": retained[0],
                 "deletedFiles": deleted,
-            },
-            fh,
-        )
+            }
+        ),
+    )
     return {"files_deleted": len(deleted), "retained_instants": retained}
 
 
@@ -1998,15 +1989,16 @@ def restore_hudi_lite(table_path: str, instant: str) -> dict:
     tdir = os.path.join(table_path, ".hoodie")
     if os.path.isdir(os.path.join(tdir, "timeline")):
         tdir = os.path.join(tdir, "timeline")
-    with open(os.path.join(tdir, f"{ts}.restore"), "w") as fh:
-        _json.dump(
+    claim(
+        os.path.join(tdir, f"{ts}.restore"),
+        _json.dumps(
             {
                 "restoredTo": instant,
                 "rolledBackInstants": [t for t, _a, _p in later],
                 "deletedFiles": deleted,
-            },
-            fh,
-        )
+            }
+        ),
+    )
     return {
         "restored_to": instant,
         "instants_rolled_back": len(later),
@@ -2041,10 +2033,10 @@ def savepoint_hudi_lite(
     tdir = os.path.join(table_path, ".hoodie")
     if os.path.isdir(os.path.join(tdir, "timeline")):
         tdir = os.path.join(tdir, "timeline")
-    with open(os.path.join(tdir, f"{ts}.savepoint"), "w") as fh:
-        _json.dump(
-            {"savepointedInstant": pin, "name": name or pin}, fh
-        )
+    claim(
+        os.path.join(tdir, f"{ts}.savepoint"),
+        _json.dumps({"savepointedInstant": pin, "name": name or pin}),
+    )
     return {"savepointed": pin, "name": name or pin}
 
 

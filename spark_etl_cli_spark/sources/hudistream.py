@@ -22,23 +22,25 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
-from typing import Iterator, Sequence
 
 from pyspark.sql import SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource
 from pyspark.sql.types import StructType
+
+from spark_etl_cli_spark.sources.logtail import (
+    FilePart,
+    LogTailReader,
+    register_once,
+    require_path,
+)
 
 _FORMAT_NAME = "hudilite-stream"
 
 
-@dataclass
-class _FilePart(InputPartition):
-    file: str
+def _drop_meta_columns(table):
+    """The payload the user wrote: base files without hoodie meta columns."""
+    drop = [n for n in table.schema.names if n.startswith("_hoodie_")]
+    return table.drop_columns(drop) if drop else table
 
 
 def _table_schema(path: str) -> StructType:
@@ -74,54 +76,30 @@ def _table_schema(path: str) -> StructType:
     )
 
 
-class _HudiStreamReader(DataSourceStreamReader):
+class _HudiStreamReader(LogTailReader):
+    offset_key = "instant"
+    start = 0
+
     def __init__(self, options: dict) -> None:
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("hudi stream reader requires a path")
+        super().__init__(options)
         # Python DataSource option keys arrive LOWERCASED
         self.skip_changes = str(
             options.get("skip-change-commits", "")
         ).lower() in ("1", "true", "yes")
-        # steady-state backlog control: ≤N instants per micro-batch
-        # while tailing (ordinal over the timeline — instants are
-        # timestamps, not dense); the first batch after a (re)start is
-        # uncapped (see deltastream.py for why)
-        self.max_commits = int(
-            options.get("max-commits-per-batch")
-            or options.get("maxcommitsperbatch")
-            or 0
-        )
-        self._pos: int | None = None
 
-    def initialOffset(self) -> dict:
-        return {"instant": 0}
-
-    def latestOffset(self) -> dict:
+    def commit_ids(self) -> list[int]:
         from spark_etl_cli_spark.sources.hudi_lite import (
             _completed_instants,
         )
 
-        instants = _completed_instants(self.path)
-        ts_list = sorted(int(i[0]) for i in instants)
-        real = ts_list[-1] if ts_list else 0
-        if self.max_commits and self._pos is not None:
-            ahead = [t for t in ts_list if t > self._pos][
-                : self.max_commits
-            ]
-            return {"instant": ahead[-1] if ahead else self._pos}
-        return {"instant": real}
+        return sorted(int(i[0]) for i in _completed_instants(self.path))
 
-    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
+    def files_between(self, lo: int, hi: int) -> list[FilePart]:
         from spark_etl_cli_spark.sources.hudi_lite import (
             _completed_instants,
         )
 
-        lo, hi = int(start.get("instant", 0)), int(end.get("instant", 0))
-        self._pos = max(lo, hi, self._pos if self._pos is not None else 0)
-        if hi <= lo:
-            return [_FilePart("")]
-        files: list[str] = []
+        files: set[str] = set()
         seen_fids: set[str] = set()
         for ts, action, ipath in _completed_instants(self.path):
             with open(ipath) as fh:
@@ -158,30 +136,13 @@ class _HudiStreamReader(DataSourceStreamReader):
                             "instants whole, or use batch hudi:// reads"
                         )
                 else:
-                    files.extend(
+                    files.update(
                         os.path.join(self.path, st["path"])
                         for _p, st in stats
                         if st["path"]
                     )
             seen_fids |= fids
-        parts = [_FilePart(f) for f in sorted(set(files))]
-        return parts or [_FilePart("")]
-
-    def read(self, partition: _FilePart) -> Iterator:
-        if not partition.file:
-            return
-        import pyarrow.parquet as pq
-
-        table = pq.read_table(partition.file)
-        drop = [n for n in table.schema.names if n.startswith("_hoodie_")]
-        if drop:
-            table = table.drop_columns(drop)
-        for batch in table.to_batches():
-            if batch.num_rows:
-                yield batch
-
-    def commit(self, end: dict) -> None:
-        return None
+        return [FilePart(f, _drop_meta_columns) for f in sorted(files)]
 
 
 class HudiLiteStreamSource(DataSource):
@@ -190,20 +151,11 @@ class HudiLiteStreamSource(DataSource):
         return _FORMAT_NAME
 
     def schema(self) -> StructType:
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("hudi stream requires a path")
-        return _table_schema(path)
+        return _table_schema(require_path(self.options))
 
     def streamReader(self, schema: StructType) -> _HudiStreamReader:
         return _HudiStreamReader(dict(self.options))
 
 
-_registered_sessions: set[str] = set()
-
-
 def ensure_registered(spark: SparkSession) -> None:
-    key = str(id(spark))
-    if key not in _registered_sessions:
-        spark.dataSource.register(HudiLiteStreamSource)
-        _registered_sessions.add(key)
+    register_once(spark, HudiLiteStreamSource)

@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from spark_etl_cli_spark.sources.commit import claim, overwrite
+
 # spec v3 reserved field ids for the MATERIALIZED row-lineage columns
 # rewritten data files carry (name-mapping entries under these ids name
 # the physical columns; fresh files derive first_row_id + position
@@ -53,26 +55,64 @@ def is_iceberg_table(table_path: str) -> bool:
     )
 
 
-def _load_metadata(table_path: str) -> dict:
+class _Metadata(dict):
+    """A loaded metadata document plus the N of the ``vN.metadata.json``
+    it came from — the base a writer's commit claims ``N + 1`` against
+    (:func:`_commit_metadata`)."""
+
+    version = 0
+
+
+def _version_of(path: str) -> int:
+    m = re.match(r"v?(\d+)", os.path.basename(path))
+    return int(m.group(1)) if m else -1
+
+
+def _load_metadata(table_path: str) -> _Metadata:
     meta_dir = os.path.join(table_path, "metadata")
+
+    def vpath(v: int) -> str:
+        return os.path.join(meta_dir, f"v{v}.metadata.json")
+
     hint = os.path.join(meta_dir, "version-hint.text")
+    version = None
     if os.path.exists(hint):
         with open(hint) as fh:
             v = fh.read().strip()
-        cand = os.path.join(meta_dir, f"v{v}.metadata.json")
-        if os.path.exists(cand):
-            with open(cand) as fh:
-                return json.load(fh)
-    files = _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
-    if not files:
-        raise FileNotFoundError(f"no Iceberg metadata under {meta_dir}")
+        if v.isdigit() and os.path.exists(vpath(int(v))):
+            version = int(v)
+            # the hint moves AFTER the claim: step past versions whose
+            # writer has not moved it yet (or died before it could)
+            while os.path.exists(vpath(version + 1)):
+                version += 1
+    if version is not None:
+        path = vpath(version)
+    else:
+        files = _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
+        if not files:
+            raise FileNotFoundError(f"no Iceberg metadata under {meta_dir}")
+        path = max(files, key=_version_of)
+        version = _version_of(path)
+    with open(path) as fh:
+        meta = _Metadata(json.load(fh))
+    meta.version = version
+    return meta
 
-    def version_of(p: str) -> int:
-        m = re.match(r"v?(\d+)", os.path.basename(p))
-        return int(m.group(1)) if m else -1
 
-    with open(max(files, key=version_of)) as fh:
-        return json.load(fh)
+def _commit_metadata(table_path: str, meta: dict, base_version: int) -> None:
+    """Publish ``meta`` as ``v{base_version + 1}.metadata.json``, then
+    point ``version-hint.text`` at it.
+
+    ``base_version`` is the version the writer loaded (0 for a new
+    table), so a writer whose base went stale — another commit landed
+    after it read — raises :class:`CommitConflict` instead of
+    publishing a snapshot that silently drops the other commit."""
+    meta_dir = os.path.join(table_path, "metadata")
+    version = base_version + 1
+    claim(
+        os.path.join(meta_dir, f"v{version}.metadata.json"), json.dumps(meta)
+    )
+    overwrite(os.path.join(meta_dir, "version-hint.text"), str(version))
 
 
 def _localize(path: str, table_path: str) -> str:
@@ -413,17 +453,7 @@ def set_iceberg_ref(
     }
     new_meta["refs"] = refs
     new_meta["last-updated-ms"] = int(_time.time() * 1000)
-    meta_dir = os.path.join(table_path, "metadata")
-    version = 1 + max(
-        int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
-        for p in _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
-    )
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
+    _commit_metadata(table_path, new_meta, meta.version)
     return snap["snapshot-id"]
 
 
@@ -445,17 +475,7 @@ def rollback_iceberg_lite(table_path: str, snapshot_id: int) -> int:
         refs["main"] = {"snapshot-id": snapshot_id, "type": "branch"}
         new_meta["refs"] = refs
     new_meta["last-updated-ms"] = int(_time.time() * 1000)
-    meta_dir = os.path.join(table_path, "metadata")
-    version = 1 + max(
-        int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
-        for p in _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
-    )
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
+    _commit_metadata(table_path, new_meta, meta.version)
     return snapshot_id
 
 
@@ -517,17 +537,7 @@ def fast_forward_iceberg_ref(
         refs[to] = {"snapshot-id": head, "type": "branch"}
     new_meta["refs"] = refs
     new_meta["last-updated-ms"] = int(_time.time() * 1000)
-    meta_dir = os.path.join(table_path, "metadata")
-    version = 1 + max(
-        int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
-        for p in _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
-    )
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
+    _commit_metadata(table_path, new_meta, meta.version)
     return head
 
 
@@ -1388,9 +1398,9 @@ def read_iceberg_lite(
 # parquet, then one Avro manifest for the new files, a manifest list
 # for the snapshot (append = prior snapshot's manifests + the new one,
 # so old manifests are REUSED, never rewritten — the spec's own
-# fast-append shape), and a vN+1.metadata.json claimed with
-# O_CREAT|O_EXCL (atomic on POSIX; object stores need a real catalog,
-# same caveat as delta_lite's writer).
+# fast-append shape), and a vN+1.metadata.json claimed against the
+# loaded vN through sources/commit.py (atomic on POSIX; object stores
+# need a real catalog, same caveat as delta_lite's writer).
 
 # v2-REQUIRED manifest-list fields (spec "Manifest Lists" table), with
 # the spec's field ids attached as Avro attributes so real engines'
@@ -2203,10 +2213,11 @@ def write_iceberg_lite(
         extra_meta={"format-version": str(fv).encode()},
     )
 
-    # 4. new metadata version, O_EXCL-claimed. The field set is the
-    # spec's v2 REQUIRED list — sequence numbers, last-column-id,
-    # partition specs, sort orders, epoch-millis timestamps — so real
-    # engines accept the table, not just the lite reader.
+    # 4. new metadata version, claimed against the loaded one. The
+    # field set is the spec's v2 REQUIRED list — sequence numbers,
+    # last-column-id, partition specs, sort orders, epoch-millis
+    # timestamps — so real engines accept the table, not just the lite
+    # reader.
     snapshots = list(prior.get("snapshots") or []) if prior else []
     snapshots.append(
         {
@@ -2260,19 +2271,7 @@ def write_iceberg_lite(
         refs[branch] = {"snapshot-id": snapshot_id, "type": "branch"}
         meta["refs"] = refs
         meta["current-snapshot-id"] = prior.get("current-snapshot-id")
-    version = 1
-    versions = [
-        int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
-        for p in _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
-    ]
-    if versions:
-        version = max(versions) + 1
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
+    _commit_metadata(table_path, meta, prior.version if prior else 0)
     return snapshot_id
 
 
@@ -4316,16 +4315,7 @@ def _commit_rewrite_snapshot(
             else {}
         ),
     }]
-    version = 1 + max(
-        int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
-        for p in _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
-    )
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
+    _commit_metadata(table_path, new_meta, meta.version)
 
 
 def expire_iceberg_snapshots(
@@ -4383,19 +4373,9 @@ def expire_iceberg_snapshots(
             if os.path.exists(p):
                 os.remove(p)
                 deleted += 1
-    meta_dir = os.path.join(table_path, "metadata")
     new_meta = dict(meta)
     new_meta["snapshots"] = kept
-    version = 1 + max(
-        int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
-        for p in _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
-    )
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
+    _commit_metadata(table_path, new_meta, meta.version)
     return {"expired": len(expired), "files_deleted": deleted}
 
 
@@ -4475,17 +4455,7 @@ def evolve_iceberg_spec(table_path: str, fields: list[str]) -> dict:
     import time as _time
 
     new_meta["last-updated-ms"] = int(_time.time() * 1000)
-    meta_dir = os.path.join(table_path, "metadata")
-    version = 1 + max(
-        int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
-        for p in _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
-    )
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
+    _commit_metadata(table_path, new_meta, meta.version)
     return {"spec_id": spec_id, "fields": len(new_fields)}
 
 
@@ -4665,16 +4635,7 @@ def upgrade_iceberg_format(
         "summary": {"operation": "replace"},
         "schema-id": 0,
     }]
-    version = 1 + max(
-        int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
-        for p in _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
-    )
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
+    _commit_metadata(table_path, new_meta, meta.version)
     return {
         "upgraded": True,
         "dvs_written": n_dvs,
@@ -4984,16 +4945,7 @@ def _delete_iceberg_mor_dv(
         "schema-id": 0,
         "first-row-id": int(meta.get("next-row-id") or 0),
     }]
-    version = 1 + max(
-        int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
-        for p in _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
-    )
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
+    _commit_metadata(table_path, new_meta, meta.version)
     return {
         "files_rewritten": 0,
         "files_added": 1,
@@ -5224,16 +5176,7 @@ def _delete_iceberg_mor(
         "summary": {"operation": "delete"},
         "schema-id": 0,
     }]
-    version = 1 + max(
-        int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
-        for p in _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
-    )
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
+    _commit_metadata(table_path, new_meta, meta.version)
     return {
         "files_rewritten": 0,
         "files_added": len(del_files),

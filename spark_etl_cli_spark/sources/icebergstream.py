@@ -21,86 +21,47 @@ snapshots (compaction) are always skipped: the row set is unchanged.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-from typing import Iterator, Sequence
-
 from pyspark.sql import SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource
 from pyspark.sql.types import StructType
+
+from spark_etl_cli_spark.sources.logtail import (
+    FilePart,
+    LogTailReader,
+    register_once,
+    require_path,
+)
 
 _FORMAT_NAME = "iceberglite-stream"
 
 
-@dataclass
-class _FilePart(InputPartition):
-    file: str
-    schema_json: str
+class _IcebergStreamReader(LogTailReader):
+    offset_key = "snapshot"
 
-
-class _IcebergStreamReader(DataSourceStreamReader):
     def __init__(self, options: dict) -> None:
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("iceberg stream reader requires a path")
+        super().__init__(options)
         self.skip_overwrites = str(
             options.get("skip-overwrite-snapshots", "")
         ).lower() in ("1", "true", "yes")
-        # steady-state backlog control: ≤N snapshots per micro-batch
-        # while tailing (ordinal over the snapshot list — ids are only
-        # monotone, not dense); the first batch after a (re)start is
-        # uncapped (see deltastream.py for why)
-        self.max_commits = int(
-            options.get("max-commits-per-batch")
-            or options.get("maxcommitsperbatch")
-            or 0
-        )
-        self._pos: int | None = None
 
-    def _meta(self):
+    def commit_ids(self) -> list[int]:
         from spark_etl_cli_spark.sources.iceberg_lite import _load_metadata
 
-        return _load_metadata(self.path)
-
-    def initialOffset(self) -> dict:
-        return {"snapshot": -1}
-
-    def latestOffset(self) -> dict:
         try:
-            meta = self._meta()
+            meta = _load_metadata(self.path)
         except FileNotFoundError:
-            return {"snapshot": -1}
-        snaps = meta.get("snapshots") or []
-        ids = sorted(s["snapshot-id"] for s in snaps)
-        real = ids[-1] if ids else -1
-        if self.max_commits and self._pos is not None:
-            ahead = [i for i in ids if i > self._pos][: self.max_commits]
-            return {"snapshot": ahead[-1] if ahead else self._pos}
-        return {"snapshot": real}
+            return []
+        return sorted(s["snapshot-id"] for s in meta.get("snapshots") or [])
 
-    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        self._pos = max(
-            start.get("snapshot", -1),
-            end.get("snapshot", -1),
-            self._pos if self._pos is not None else -1,
-        )
+    def files_between(self, lo: int, hi: int) -> list[FilePart]:
         from spark_etl_cli_spark.sources.iceberg_lite import (
             _load_metadata,
             _localize,
             _manifest_entries,
-            _schema_to_spark,
         )
 
-        lo, hi = start.get("snapshot", -1), end.get("snapshot", -1)
-        if hi <= lo:
-            return [_FilePart("", "")]
-        meta = _load_metadata(self.path)
-        schema_json = _schema_to_spark(meta).json()
-        files: list[str] = []
-        for snap in meta.get("snapshots") or []:
+        files: set[str] = set()
+        for snap in _load_metadata(self.path).get("snapshots") or []:
             sid = snap["snapshot-id"]
             if not (lo < sid <= hi):
                 continue
@@ -132,22 +93,8 @@ class _IcebergStreamReader(DataSourceStreamReader):
                     continue  # delete files are not streamed
                 if e.get("snapshot_id") not in (None, sid):
                     continue  # carried entry re-listed by a later manifest
-                files.append(_localize(dfile["file_path"], self.path))
-        parts = [_FilePart(f, schema_json) for f in sorted(set(files))]
-        return parts or [_FilePart("", "")]
-
-    def read(self, partition: _FilePart) -> Iterator:
-        if not partition.file:
-            return
-        import pyarrow.parquet as pq
-
-        table = pq.read_table(partition.file)
-        for batch in table.to_batches():
-            if batch.num_rows:
-                yield batch
-
-    def commit(self, end: dict) -> None:
-        return None
+                files.add(_localize(dfile["file_path"], self.path))
+        return [FilePart(f) for f in sorted(files)]
 
 
 class IcebergLiteStreamSource(DataSource):
@@ -161,20 +108,11 @@ class IcebergLiteStreamSource(DataSource):
             _schema_to_spark,
         )
 
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("iceberg stream requires a path")
-        return _schema_to_spark(_load_metadata(path))
+        return _schema_to_spark(_load_metadata(require_path(self.options)))
 
     def streamReader(self, schema: StructType) -> _IcebergStreamReader:
         return _IcebergStreamReader(dict(self.options))
 
 
-_registered_sessions: set[str] = set()
-
-
 def ensure_registered(spark: SparkSession) -> None:
-    key = str(id(spark))
-    if key not in _registered_sessions:
-        spark.dataSource.register(IcebergLiteStreamSource)
-        _registered_sessions.add(key)
+    register_once(spark, IcebergLiteStreamSource)

@@ -1000,7 +1000,7 @@ class IcebergSink:
     """``iceberg:///path/to/table[?mode=append|overwrite]`` — batch
     commits via the engine-free writer (sources/iceberg_lite.py):
     distributed parquet data write + avro manifest/manifest-list +
-    O_EXCL-claimed metadata version. Streaming appends via the
+    atomically claimed metadata version. Streaming appends via the
     foreachBatch bridge."""
 
     uri: ParsedUri

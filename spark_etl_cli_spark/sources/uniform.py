@@ -564,6 +564,8 @@ def export_hudi_as_iceberg(spark: SparkSession, table_path: str) -> int:
     from spark_etl_cli_spark.sources.avro_lite import write_container
     from spark_etl_cli_spark.sources.iceberg_lite import (
         _MANIFEST_LIST_SCHEMA,
+        _commit_metadata,
+        _load_metadata,
         _manifest_schema_for,
         _max_field_id,
         _parquet_row_count,
@@ -574,11 +576,8 @@ def export_hudi_as_iceberg(spark: SparkSession, table_path: str) -> int:
     iceberg_schema = _spark_to_iceberg_schema(schema)
     meta_dir = os.path.join(table_path, "metadata")
     os.makedirs(meta_dir, exist_ok=True)
-    prior_versions = _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
     prior = None
-    if prior_versions:
-        from spark_etl_cli_spark.sources.iceberg_lite import _load_metadata
-
+    if _glob.glob(os.path.join(meta_dir, "*.metadata.json")):
         prior = _load_metadata(table_path)
     snapshot_id = (
         max(
@@ -690,19 +689,7 @@ def export_hudi_as_iceberg(spark: SparkSession, table_path: str) -> int:
         },
         "snapshots": snapshots,
     }
-    version = 1
-    versions = [
-        int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
-        for p in prior_versions
-    ]
-    if versions:
-        version = max(versions) + 1
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
+    _commit_metadata(table_path, new_meta, prior.version if prior else 0)
     return snapshot_id
 
 
@@ -725,7 +712,9 @@ def export_delta_as_iceberg(spark: SparkSession, table_path: str) -> int:
     )
     from spark_etl_cli_spark.sources.iceberg_lite import (
         _MANIFEST_LIST_SCHEMA,
+        _commit_metadata,
         _hive_value,
+        _load_metadata,
         _manifest_schema_for,
         _max_field_id,
         _parquet_row_count,
@@ -926,11 +915,8 @@ def export_delta_as_iceberg(spark: SparkSession, table_path: str) -> int:
 
     meta_dir = os.path.join(table_path, "metadata")
     os.makedirs(meta_dir, exist_ok=True)
-    prior_versions = _glob.glob(os.path.join(meta_dir, "*.metadata.json"))
     prior = None
-    if prior_versions:
-        from spark_etl_cli_spark.sources.iceberg_lite import _load_metadata
-
+    if _glob.glob(os.path.join(meta_dir, "*.metadata.json")):
         prior = _load_metadata(table_path)
     snapshot_id = (
         max(
@@ -1288,17 +1274,5 @@ def export_delta_as_iceberg(spark: SparkSession, table_path: str) -> int:
     }
     if prior and prior.get("refs"):
         new_meta["refs"] = prior["refs"]
-    version = 1
-    versions = [
-        int(re.match(r"v?(\d+)", os.path.basename(p)).group(1))
-        for p in prior_versions
-    ]
-    if versions:
-        version = max(versions) + 1
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(version))
+    _commit_metadata(table_path, new_meta, prior.version if prior else 0)
     return snapshot_id
