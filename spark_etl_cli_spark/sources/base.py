@@ -14,7 +14,9 @@ Mirrors the capability of the reference's ``DataFrameSource`` /
 
 from __future__ import annotations
 
+import functools
 import json
+import weakref
 from dataclasses import dataclass, field
 from typing import Protocol
 
@@ -30,6 +32,23 @@ class DataFrameSource(Protocol):
 
 class DataFrameSink(Protocol):
     def write(self, df: DataFrame) -> bool: ...
+
+
+def per_spark_context(probe):
+    """Memoize ``probe(spark, *args)`` per SparkContext (one live JVM
+    each), held weakly so a stopped context's answers go with it: a
+    classpath does not change, and a failed probe costs a py4j
+    exception round trip every time it is asked."""
+    answers: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+    @functools.wraps(probe)
+    def cached(spark: SparkSession, *args):
+        seen = answers.setdefault(spark.sparkContext, {})
+        if args not in seen:
+            seen[args] = probe(spark, *args)
+        return seen[args]
+
+    return cached
 
 
 def parse_schema_json(schema_json: str) -> T.StructType:

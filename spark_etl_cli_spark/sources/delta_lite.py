@@ -340,6 +340,13 @@ def _max_files() -> int:
     return int(os.environ.get("SPARK_ETL_DELTA_LITE_MAX_FILES", "2000000"))
 
 
+class _ReplayedMeta(dict):
+    """A replayed metaData action; ``.version`` is the log version the
+    replay reached — the version a commit built on it must follow."""
+
+    version: int
+
+
 def _replay(
     spark: SparkSession,
     table_path: str,
@@ -404,6 +411,8 @@ def _replay(
                     _check_protocol(action["protocol"])
     if meta is None:
         raise ValueError(f"no Delta metaData action found under {log_dir}")
+    meta = _ReplayedMeta(meta)
+    meta.version = int(commits[-1][:20]) if commits else cp_version
     active = dict(tail_active)
     if adds_df is not None:
         # a checkpoint path is superseded by the tail iff the tail's
@@ -1962,6 +1971,9 @@ def _write_commit(
     either order without conflict. Anything that read table state
     (row ops, ALTER, overwrite) raises on collision instead — its
     snapshot is stale and the caller must re-run against the new HEAD.
+    With ``read_version`` (the version its snapshot replayed to) such a
+    commit must land at ``read_version + 1``: one that landed in between
+    is a conflict too, not a slot to skip past.
     Emits a parquet checkpoint on the interval to bound replay cost.
     """
     log_dir = _log_dir(table_path)
@@ -1975,6 +1987,12 @@ def _write_commit(
     checked_to = read_version  # commits ≤ this are part of our snapshot
     for _ in range(attempts):
         version = 0 if first else _next_version(log_dir)
+        if (
+            not blind_append
+            and read_version is not None
+            and version > read_version + 1
+        ):
+            break  # a commit landed after this snapshot was read
         # A blind append may serialize after concurrent commits ONLY if
         # none of them changed table configuration: real Delta fails
         # appends that race with a metaData/protocol change, because the
@@ -2496,7 +2514,7 @@ def optimize_delta_lite(
             }
         }
     )
-    _write_commit(spark, table_path, actions)
+    _write_commit(spark, table_path, actions, read_version=meta.version)
     return stats
 
 
@@ -3198,7 +3216,7 @@ def delete_delta_lite(
                 }
             }
         )
-        _write_commit(spark, table_path, actions)
+        _write_commit(spark, table_path, actions, read_version=meta.version)
         return {"files_dv": n_files, "files_added": 0, "rows_deleted": n_rows}
 
     # copy-on-write: find affected files + per-file match counts in ONE
@@ -3244,7 +3262,7 @@ def delete_delta_lite(
             }
         }
     )
-    _write_commit(spark, table_path, actions)
+    _write_commit(spark, table_path, actions, read_version=meta.version)
     return {
         "files_rewritten": len(affected),
         "files_added": len(new_adds),
@@ -3416,7 +3434,7 @@ def _upsert_delta_lite(
             }
         }
     )
-    _write_commit(spark, table_path, actions)
+    _write_commit(spark, table_path, actions, read_version=meta.version)
 
 
 def _merge_key_cond(keys: list[str]):
@@ -3895,7 +3913,7 @@ def merge_delta_lite(
             }
         }
     )
-    _write_commit(spark, table_path, actions)
+    _write_commit(spark, table_path, actions, read_version=meta.version)
     return {
         "files_rewritten": len(affected),
         "files_added": len(new_adds),
@@ -4570,7 +4588,7 @@ def update_delta_lite(
             }
         }
     )
-    _write_commit(spark, table_path, actions)
+    _write_commit(spark, table_path, actions, read_version=meta.version)
     return {
         "files_rewritten": len(affected),
         "files_added": len(new_adds),

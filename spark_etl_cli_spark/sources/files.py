@@ -23,7 +23,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from spark_etl_cli_spark.operators.schema_tools import json_encode_complex
 from spark_etl_cli_spark.registry import register_sink, register_source
-from spark_etl_cli_spark.sources.base import FileSink, FileSource, reader_options
+from spark_etl_cli_spark.sources.base import (
+    FileSink,
+    FileSource,
+    per_spark_context,
+    reader_options,
+)
 from spark_etl_cli_spark.uri import ParsedUri
 
 
@@ -57,6 +62,7 @@ def json_sink(p: ParsedUri) -> FileSink:
     return FileSink(p, "json")
 
 
+@per_spark_context
 def _has_spark_avro(spark: SparkSession) -> bool:
     # Class.forName is NOT enough here: Spark 4 ships some
     # org.apache.spark.sql.avro classes in the main distro without the

@@ -30,6 +30,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from spark_etl_cli_spark.sources.commit import claim
+from spark_etl_cli_spark.sources.keyprobe import (
+    KeyProbe,
+    check_unique_keys,
+    probe_keys,
+)
 
 # Hudi's first bookkeeping meta column; stamped on COW base-file rows
 # so incremental queries can filter "changed since instant T"
@@ -758,65 +763,96 @@ def _read_hudi_incremental_mor(
 # --- engine-free WRITER (COW) ---------------------------------------------
 # insert (new file groups per commit), insert_overwrite_table
 # (replacecommit), and record-key UPSERT: affected file groups located
-# by a distributed semi-join over _metadata.file_path (the lite
-# stand-in for Hudi's bloom index) and rewritten as new file slices;
-# untouched groups are never read past the key probe or rewritten.
+# by one key probe over _metadata.file_path (the lite stand-in for
+# Hudi's bloom index) and rewritten as new file slices; untouched
+# groups are never read past the key probe or rewritten.
 
 
-def _upsert_rewrites(
+def _live_file_groups(
+    prior: list[tuple[str, str, str]],
+) -> dict[tuple[str, str], str]:
+    """{(partition, fileId): latest base file} after replaying ``prior``."""
+    live: dict[tuple[str, str], str] = {}
+    for _pts, pact, ppath in prior:
+        with open(ppath) as fh:
+            c = json.load(fh)
+        if pact == "replacecommit":
+            for part, fids in (c.get("partitionToReplaceFileIds") or {}).items():
+                for fid in fids:
+                    live.pop((part, fid), None)
+        for part, sts in (c.get("partitionToWriteStats") or {}).items():
+            for st in sts:
+                live[(part, st.get("fileId") or st["path"])] = st["path"]
+    return live
+
+
+def _locate_upsert(
     df: DataFrame,
     table_path: str,
-    ts: str,
-    commit_uuid: str,
     record_key: str,
     live: dict[tuple[str, str], str],
-) -> dict[str, list[dict]]:
-    """New file slices for the file groups an upsert touches.
-
-    Location (which groups hold the incoming keys) is one distributed
-    semi-join over ``_metadata.file_path`` — the lite stand-in for
-    Hudi's bloom index; groups with no matching key are never read past
-    that probe and never rewritten. The rewrite itself is one job:
-    affected rows anti-joined against the incoming keys, repartitioned
-    by file group so each group lands as exactly ONE new base file
-    (a file slice is one base file per (fileId, instant)).
-    Returns {partition: [write stats]} with the ORIGINAL fileIds, so
-    latest-slice-wins replay hides the old slices.
-    """
-    import shutil
-    import tempfile
-
+    refusal: str,
+) -> tuple[dict[str, tuple[str, str]], KeyProbe]:
+    """(base file -> (partition, fileId), the key probe locating the
+    base files that hold an incoming key) — one Spark action, the lite
+    stand-in for Hudi's bloom index. The probe also refuses duplicate
+    or null incoming keys; groups with no matching key are never read
+    past it."""
     from pyspark.sql import functions as F
 
-    spark = df.sparkSession
-    if not live:
-        return {}
     # normalized absolute path -> (partition, fileId)
     loc: dict[str, tuple[str, str]] = {}
     for (part, fid), rel in live.items():
         loc[os.path.abspath(os.path.join(table_path, rel))] = (part, fid)
+    target = None
+    if loc:
+        target = df.sparkSession.read.parquet(*sorted(loc)).select(
+            _rk_expr(record_key).alias("__k"),
+            F.regexp_replace(
+                F.col("_metadata.file_path"), "^file:/+", "/"
+            ).alias("__file"),
+        )
+    probe = probe_keys(
+        df, _rk_fields(record_key), refusal, target, _rk_expr(record_key)
+    )
+    return loc, probe
+
+
+def _write_empty_slice(schema, path: str) -> None:
+    """Schema-only parquet base file for a file group whose every row
+    was upserted away, written with pyarrow (no Spark job). The footer
+    carries the Spark schema Spark's own writer records, so Spark reads
+    it with the same schema as a non-empty slice."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema).with_metadata(
+        {"org.apache.spark.sql.parquet.row.metadata": schema.json()}
+    )
+    pq.write_table(arrow.empty_table(), path)
+
+
+def _rewrite_survivors(
+    df: DataFrame,
+    record_key: str,
+    loc: dict[str, tuple[str, str]],
+    affected: list[str],
+    out_dir: str,
+) -> None:
+    """The ``affected`` base files' rows minus the incoming keys,
+    written under ``out_dir/__fid=<fileId>/``."""
+    from pyspark.sql import functions as F
+
     norm_path = F.regexp_replace(
         F.col("_metadata.file_path"), "^file:/+", "/"
     )
     keys = df.select(_rk_expr(record_key).alias("__k")).distinct()
-    base = spark.read.parquet(*sorted(loc)).select(
-        _rk_expr(record_key).alias("__k"), norm_path.alias("__path")
-    )
-    affected = sorted(
-        r["__path"]
-        for r in base.join(keys, "__k", "left_semi")
-        .select("__path")
-        .distinct()
-        .collect()
-    )
-    if not affected:
-        return {}
     fid_of = {p: loc[p][1] for p in affected}
     mapping = F.create_map(
         *[F.lit(x) for p in affected for x in (p, fid_of[p])]
     )
     remaining = (
-        spark.read.option("mergeSchema", "true")
+        df.sparkSession.read.option("mergeSchema", "true")
         .parquet(*affected)
         .withColumn("__fid", mapping[norm_path])
         .withColumn("__k", _rk_expr(record_key))
@@ -833,12 +869,41 @@ def _upsert_rewrites(
     # incoming frame's payload order
     payload = [c for c in df.columns if c != _HOODIE_TS_COL]
     remaining = remaining.select(_HOODIE_TS_COL, *payload, "__fid")
+    remaining.repartition("__fid").write.mode("overwrite").partitionBy(
+        "__fid"
+    ).parquet(out_dir)
+
+
+def _upsert_rewrites(
+    df: DataFrame,
+    table_path: str,
+    ts: str,
+    commit_uuid: str,
+    record_key: str,
+    loc: dict[str, tuple[str, str]],
+    probe: KeyProbe,
+) -> dict[str, list[dict]]:
+    """New file slices for the base files ``probe`` matched (see
+    :func:`_locate_upsert`).
+
+    The rewrite is one job, none when no affected row survives:
+    affected rows anti-joined against the incoming keys, repartitioned
+    by file group so each group lands as exactly ONE new base file (a
+    file slice is one base file per (fileId, instant)). Returns
+    {partition: [write stats]} with the ORIGINAL fileIds, so
+    latest-slice-wins replay hides the old slices.
+    """
+    import shutil
+    import tempfile
+
+    affected = sorted(probe.matched)
+    if not affected:
+        return {}
     tmp = tempfile.mkdtemp(prefix="hudi_lite_upsert_")
     out: dict[str, list[dict]] = {}
     try:
-        remaining.repartition("__fid").write.mode("overwrite").partitionBy(
-            "__fid"
-        ).parquet(tmp)
+        if any(probe.survivors(p) for p in affected):
+            _rewrite_survivors(df, record_key, loc, affected, tmp)
         for p in affected:
             part, fid = loc[p]
             fid_dir = os.path.join(tmp, f"__fid={fid}")
@@ -862,15 +927,7 @@ def _upsert_rewrites(
             else:
                 # every row of this group was upserted away: the new
                 # slice is an EMPTY base file (schema-only parquet)
-                spark.createDataFrame([], df.schema).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(fid_dir + "_empty")
-                empty = next(
-                    f
-                    for f in os.listdir(fid_dir + "_empty")
-                    if f.endswith(".parquet") and not f.startswith("_")
-                )
-                shutil.move(os.path.join(fid_dir + "_empty", empty), dst)
+                _write_empty_slice(df.schema, dst)
             out.setdefault(part, []).append(
                 {
                     "fileId": fid,
@@ -915,10 +972,10 @@ def write_hudi_lite(
       holding its rows minus the incoming keys (latest-slice-wins
       makes the old slice invisible), and the full incoming frame
       lands as a new file group — together exactly
-      ``(old − keys) ∪ incoming``. Key-to-file-group location uses a
-      distributed semi-join over ``_metadata.file_path`` (the lite
-      stand-in for Hudi's bloom index); unaffected groups are NOT
-      rewritten. On MERGE_ON_READ: matched rows become AVRO data
+      ``(old − keys) ∪ incoming``. Key-to-file-group location uses
+      one key probe over ``_metadata.file_path`` (the lite stand-in for
+      Hudi's bloom index) that also checks the keys; unaffected groups
+      are NOT rewritten. On MERGE_ON_READ: matched rows become AVRO data
       blocks APPENDED to the affected groups' log files (zero base
       bytes rewritten — ``_mor_upsert_commit``), the rest a new file
       group, all in one deltacommit. Incoming keys must be unique (no
@@ -953,25 +1010,20 @@ def write_hudi_lite(
         )
     if mode == "upsert" and not record_key:
         raise ValueError("hudi_lite upsert needs record_key=<column>")
-    if mode == "upsert":
-        from pyspark.sql import functions as F
-
-        rk_fields = _rk_fields(record_key)
-        any_null = F.lit(False)
-        for f in rk_fields:
-            any_null = any_null | F.col(f).isNull()
-        bad = (
-            df.groupBy(*rk_fields)
-            .count()
-            .filter((F.col("count") > 1) | any_null)
-            .head(1)
-        )
-        if bad:
-            raise ValueError(
-                f"hudi_lite upsert: incoming {record_key!r} values must be "
-                "unique and non-null (no precombine field is emulated); "
-                f"first offender: {bad[0][0]!r}"
-            )
+    refusal = (
+        f"hudi_lite upsert: incoming {record_key!r} values must be "
+        "unique and non-null (no precombine field is emulated)"
+    )
+    # an upsert into an existing COW table checks its keys in the probe
+    # that locates them (_locate_upsert); the others check them here
+    prior = _completed_instants(table_path)
+    probe_cow = (
+        mode == "upsert"
+        and bool(prior)
+        and _table_type(table_path) == "COPY_ON_WRITE"
+    )
+    if mode == "upsert" and not probe_cow:
+        check_unique_keys(df, _rk_fields(record_key), refusal)
     hoodie = os.path.join(table_path, ".hoodie")
     os.makedirs(hoodie, exist_ok=True)
     props = os.path.join(hoodie, "hoodie.properties")
@@ -1004,7 +1056,6 @@ def write_hudi_lite(
     if missing_cols:
         raise ValueError(f"partition_by columns not in frame: {missing_cols}")
 
-    prior = _completed_instants(table_path)
     if mode == "upsert" and prior:
         # a mismatched key silently merges on the WRONG column (and MOR
         # delete blocks store the TABLE key's string form) — refuse
@@ -1014,6 +1065,10 @@ def write_hudi_lite(
                 f"hudi_lite upsert record_key={record_key!r} != the "
                 f"table's hoodie.table.recordkey.fields={tbl_rk!r}"
             )
+    if probe_cow:
+        loc, probe = _locate_upsert(
+            df, table_path, record_key, _live_file_groups(prior), refusal
+        )
     # instants are ordered timestamps; derive the next one from the
     # prior tail so commits stay monotonic without wall-clock reads
     ts = f"{int(prior[-1][0]) + 1:014d}" if prior else f"{10**13:014d}"
@@ -1082,30 +1137,16 @@ def write_hudi_lite(
     # writer's shape); replacecommit below overrides for overwrite
     action = "deltacommit" if is_mor else "commit"
 
-    def _live_map() -> dict[tuple[str, str], str]:
-        live: dict[tuple[str, str], str] = {}
-        for pts, pact, ppath in prior:
-            with open(ppath) as fh:
-                c = json.load(fh)
-            if pact == "replacecommit":
-                for part, fids in (c.get("partitionToReplaceFileIds") or {}).items():
-                    for fid in fids:
-                        live.pop((part, fid), None)
-            for part, sts in (c.get("partitionToWriteStats") or {}).items():
-                for st in sts:
-                    live[(part, st.get("fileId") or st["path"])] = st["path"]
-        return live
-
     if mode == "overwrite" and prior:
         # replace every live file group as of the prior snapshot
         replaced: dict[str, list[str]] = {}
-        for part, fid in _live_map():
+        for part, fid in _live_file_groups(prior):
             replaced.setdefault(part, []).append(fid)
         body["partitionToReplaceFileIds"] = replaced
         action = "replacecommit"
-    elif mode == "upsert" and prior:
+    elif probe_cow:
         rewrites = _upsert_rewrites(
-            df, table_path, ts, commit_uuid, record_key, _live_map()
+            df, table_path, ts, commit_uuid, record_key, loc, probe
         )
         for part, sts in rewrites.items():
             body["partitionToWriteStats"].setdefault(part, []).extend(sts)

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spark_etl_cli_spark.sources.commit import claim, overwrite
+from spark_etl_cli_spark.sources.keyprobe import check_unique_keys, probe_keys
 
 # spec v3 reserved field ids for the MATERIALIZED row-lineage columns
 # rewritten data files carry (name-mapping entries under these ids name
@@ -2897,9 +2898,11 @@ def upsert_iceberg_lite(
     ADDED, affected files absent), the shape Iceberg's own
     copy-on-write MERGE produces.
 
-    Location is one distributed semi-join over the key column: only
-    files holding ≥1 matching key are rewritten (minus the matched
-    keys); unaffected files are never read past the probe. Incoming
+    Location is one key probe (``sources/keyprobe.py``): a single
+    Spark action checks the incoming keys, finds the files holding ≥1
+    matching key and counts the matched and inserted rows. Only those
+    files are rewritten (minus the matched keys); unaffected files are
+    never read past the probe. Incoming
     keys must be unique and non-null (a target row matches at most one
     source row). Tables with live position/equality delete files take
     the delete-aware path (affected files re-read through the full
@@ -2920,13 +2923,18 @@ def upsert_iceberg_lite(
             os.path.join(table_path, "metadata", "*.metadata.json")
         )
     ):
-        # MERGE into a missing table is CREATE (hudi/delta convention)
-        write_iceberg_lite(df, table_path)
+        # MERGE into a missing table is CREATE (hudi/delta convention);
+        # the inserted rows are the new manifest's record counts
+        sid = write_iceberg_lite(df, table_path)
+        snap = _snapshot(_load_metadata(table_path), sid)
         return {
             "files_rewritten": 0,
             "files_added": 1,
             "rows_updated": 0,
-            "rows_inserted": df.count(),
+            "rows_inserted": sum(
+                e["data_file"].get("record_count") or 0
+                for e in _manifest_entries(table_path, snap)
+            ),
         }
     meta = _load_metadata(table_path)
     schema = _schema_to_spark(meta)
@@ -2940,17 +2948,10 @@ def upsert_iceberg_lite(
         )
     if on not in df.columns:
         raise ValueError(f"upsert key {on!r} not in the table schema")
-    bad = (
-        df.groupBy(on)
-        .count()
-        .filter((F.col("count") > 1) | F.col(on).isNull())
-        .head(1)
+    refusal = (
+        f"iceberg upsert: incoming {on!r} values must be unique and "
+        "non-null"
     )
-    if bad:
-        raise ValueError(
-            f"iceberg upsert: incoming {on!r} values must be unique and "
-            f"non-null; first offender: {bad[0][0]!r}"
-        )
     snap = _snapshot(meta, None)
     live = [
         e for e in _manifest_entries(table_path, snap) if e.get("status") != 2
@@ -2962,6 +2963,7 @@ def upsert_iceberg_lite(
         # delete-aware path: affected files re-read through the full
         # delete-applying reader, prior delete manifests carried for
         # the untouched files (see _cow_keyed_rewrite_under_deletes)
+        check_unique_keys(df, [on], refusal)
         keys_df = df.select(on).distinct()
         live_keys = read_iceberg_lite(
             spark, table_path, with_provenance=True
@@ -2991,6 +2993,7 @@ def upsert_iceberg_lite(
         # non-identity spec: matched files rewrite under their raw
         # recorded tuple, the incoming frame splits by the evaluated
         # transforms (see _upsert_cow_transformed)
+        check_unique_keys(df, [on], refusal)
         return _upsert_cow_transformed(spark, table_path, meta, live, df, on)
     scan, grouped, union_scan = _cow_scan_tools(
         spark, table_path, meta, part_fields
@@ -3004,40 +3007,32 @@ def upsert_iceberg_lite(
     by_path = {
         _localize(e["data_file"]["file_path"], table_path): e for e in live
     }
+    # one action checks the keys, finds the affected files and counts
+    # the matched target rows and the inserts (source keys absent from
+    # the target; df.count() - n_updated would go wrong when the target
+    # holds duplicate keys)
+    probe = probe_keys(
+        df, [on], refusal,
+        union_scan(live, with_file=True).select(on, "__file")
+        if live else None,
+    )
     affected: list[dict] = []
-    n_updated = 0
-    if live:
-        counts = (
-            union_scan(live, with_file=True)
-            .join(keys, on)
-            .groupBy("__file")
-            .count()
-            .collect()
-        )
-        for r in counts:
-            e = by_path.get(r["__file"])
-            if e is None:
-                raise RuntimeError(
-                    f"upsert_iceberg_lite: scanned file {r['__file']!r} "
-                    "missing from the manifest file list — refusing to "
-                    "commit a partial merge"
-                )
-            affected.append(e)
-        n_updated = sum(r["count"] for r in counts)
+    partial: list[dict] = []  # affected files keeping unmatched rows
+    for path in sorted(probe.matched):
+        e = by_path.get(path)
+        if e is None:
+            raise RuntimeError(
+                f"upsert_iceberg_lite: scanned file {path!r} "
+                "missing from the manifest file list — refusing to "
+                "commit a partial merge"
+            )
+        affected.append(e)
+        if probe.survivors(path):
+            partial.append(e)
+    n_updated = probe.rows_matched
+    n_inserted = probe.unmatched
     affected_ids = {id(e) for e in affected}
     untouched = [e for e in live if id(e) not in affected_ids]
-    # count inserts DIRECTLY (source keys absent from the target) —
-    # df.count() - n_updated is wrong when the target holds duplicate
-    # keys: one source row matching N target rows would make it
-    # negative. Matched keys live only in affected files, so the
-    # anti-join scans just those.
-    if affected:
-        tgt_keys = (
-            union_scan(affected, with_file=False).select(on).distinct()
-        )
-        n_inserted = df.join(tgt_keys, on, "left_anti").count()
-    else:
-        n_inserted = df.count()
 
     snapshot_id = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
     seq = int(meta.get("last-sequence-number") or 0) + 1
@@ -3078,10 +3073,11 @@ def upsert_iceberg_lite(
         )
 
     new_adds: list[tuple[str, dict]] = []
-    # rewrites: affected groups minus the incoming keys
+    # rewrites: affected groups minus the incoming keys (files every
+    # row of which is replaced just drop out)
     for gidx, (key, group) in enumerate(
         sorted(
-            grouped(affected).items(),
+            grouped(partial).items(),
             key=lambda kv: tuple(str(v) for _, v in kv[0]),
         )
     ):

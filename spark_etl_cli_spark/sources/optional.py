@@ -28,7 +28,12 @@ from spark_etl_cli_spark.registry import (
     register_sink,
     register_source,
 )
-from spark_etl_cli_spark.sources.base import FileSink, FileSource, reader_options
+from spark_etl_cli_spark.sources.base import (
+    FileSink,
+    FileSource,
+    per_spark_context,
+    reader_options,
+)
 from spark_etl_cli_spark.uri import ParsedUri
 
 
@@ -41,6 +46,7 @@ class MissingDependencyError(RuntimeError):
         )
 
 
+@per_spark_context
 def _jvm_class_exists(spark: SparkSession, fqcn: str) -> bool:
     # a plain `spark._jvm.foo.Bar` access never fails (py4j resolves it
     # lazily to a JavaPackage); Class.forName is a real classpath probe

@@ -256,6 +256,56 @@ def test_delta_optimize_writes_checkpoint_on_interval(
     assert _ids(dl.read_delta_lite(spark, table)) == [0, 1, 2]
 
 
+# --- delta: row ops claim relative to the version they replayed -----------
+
+
+@pytest.mark.parametrize("row_op", ["delete", "upsert"])
+def test_delta_row_op_refuses_stale_claim(
+    spark, tmp_path, monkeypatch, row_op
+):
+    """A row op replays v0; a blind append lands as v1; the row op then
+    commits. Claiming v2 would publish a rewrite built without the
+    append's view of the table, so it must raise the conflict."""
+    import spark_etl_cli_spark.sources.delta_lite as dl
+
+    path = str(tmp_path / "dl")
+    dl.write_delta_lite(
+        spark.createDataFrame([Row(id=1, v=1), Row(id=9, v=9)]), path
+    )
+    real = dl._write_commit
+
+    def append_lands_first(*args, **kwargs):
+        monkeypatch.setattr(dl, "_write_commit", real)
+        dl.write_delta_lite(
+            spark.createDataFrame([Row(id=2, v=2)]), path, mode="append"
+        )
+        return real(*args, **kwargs)
+
+    def run():
+        if row_op == "delete":
+            dl.delete_delta_lite(spark, path, "id = 9")
+        else:
+            dl.write_delta_lite(
+                spark.createDataFrame([Row(id=9, v=90)]), path,
+                mode="upsert", merge_key="id",
+            )
+
+    monkeypatch.setattr(dl, "_write_commit", append_lands_first)
+    with pytest.raises(RuntimeError, match="concurrent commit conflict"):
+        run()
+
+    log = os.path.join(path, "_delta_log")
+    assert sorted(f for f in os.listdir(log) if f.endswith(".json")) == [
+        f"{0:020d}.json", f"{1:020d}.json"
+    ]
+    rows = {(r.id, r.v) for r in dl.read_delta_lite(spark, path).collect()}
+    assert rows == {(1, 1), (2, 2), (9, 9)}
+    # re-run against the new head: both commits survive
+    run()
+    rows = {(r.id, r.v) for r in dl.read_delta_lite(spark, path).collect()}
+    assert rows == {(1, 1), (2, 2)} | ({(9, 90)} if row_op == "upsert" else set())
+
+
 # --- log-tail stream readers: one rate-limit path -------------------------
 
 
